@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs every declared query at SPARK_GRAFT_SF_DIR and
   * prints one JSON line {"metric","value","unit","queries","sf"}.
@@ -23,128 +22,37 @@ import org.apache.spark.sql.SparkSession
   * SELF-ARBITRATING TELEMETRY (round-12): twice running, the per-round
   * artifact read the iterated graph gates at 3-4x their idle wall and the
   * contention-vs-regression arbitration had to happen after the fact from
-  * idle re-runs. The bench now records, PER QUERY, enough to arbitrate
-  * from the artifact alone:
-  *   - jobs:    Spark jobs launched by the timed execution (counting
-  *     listener, bus-drained at both edges via BusDrain so async events
-  *     can't bleed across queries). An inflated wall with UNCHANGED job
-  *     count is contention/GC, not a plan change.
-  *   - gc_ms:   collector-bean time delta across the timed execution
-  *     (local[*] = one JVM, so this covers "executor" GC too).
-  *   - heap_mb: live heap after the post-query cleanup + forced GC — the
-  *     standing-footprint ramp that marks block-manager pressure.
-  *   - rdds:    persistent RDDs left registered AFTER the query (residual
-  *     localCheckpoint blocks the query did not release itself).
-  * All four land in bench_detail.json under "telemetry"; the printed line
-  * carries the slowest queries' rows compactly (see "tele" below).
-  *
-  * DETERMINISTIC BLOCK RELEASE: after each execution the harness
-  * unpersists every leftover persistent RDD and clears the cache. The
-  * graph loops already free SUPERSEDED rounds in-loop; their FINAL
-  * round's blocks (and any gate's residual cache) previously lingered
-  * until the ContextCleaner noticed a GC — across 362 queries x 2
-  * executions that standing garbage is exactly the storage-pool pressure
-  * implicated in the q217 driver-bench pathology. Safe by construction:
-  * queries run strictly sequentially and every execution rebuilds its
-  * DataFrame from scratch, so no cross-execution state is ever live.
+  * idle re-runs. The bench now records, PER QUERY, the [[Measure]]
+  * readings of the timed execution — jobs, gc_ms, heap_mb, rdds — enough
+  * to arbitrate from the artifact alone. All four land in
+  * bench_detail.json under "telemetry"; the printed line carries the
+  * slowest queries' rows compactly (see "tele" below).
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Scan-split sizing, env-tunable for experiments. A/B at sf0.1
-      // measured 1m/256k vs the 128m/4m defaults WALL-NEUTRAL on the
-      // scan-heaviest gates (q89/q179/q238/q242/q246 within ±3%): the
-      // 4 MB open-cost floor already splits the 11 MB lineitem into ~3
-      // tasks and the per-stage cost is elsewhere — keep the defaults.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_PART_BYTES", "128m"))
-      .config("spark.sql.files.openCostInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_OPEN_COST", "4194304"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val sc = spark.sparkContext
-
-    val jobCount = new java.util.concurrent.atomic.AtomicLong(0)
-    sc.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobCount.incrementAndGet(); ()
-      }
-    })
-    def drainedJobs(): Long = {
-      org.apache.spark.graft.BusDrain.drain(sc); jobCount.get()
-    }
-    def gcMs(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).sum
-    }
-    // release residual blocks a finished execution left behind (final
-    // localCheckpoint rounds, stray .cache()s) without waiting for the
-    // ContextCleaner's GC-driven sweep
-    def releaseResiduals(): Unit = {
-      sc.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
-    }
-    def usedHeapMb(): Long = {
-      val rt = Runtime.getRuntime
-      (rt.totalMemory() - rt.freeMemory()) / (1024 * 1024)
-    }
-
-    def force(name: String): Unit =
-      SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-
-    // Optional comma-separated restriction for local iteration; the
-    // driver never sets it, so the per-round recording covers everything.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
+    val spark = GraftSession.get()
+    val measure = new Measure(spark)
     val names = SparkEntry.queries.keys.toSeq.sorted
-      .filter(n => only.isEmpty || only(n))
 
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // name -> (sec, jobs, gc_ms, heap_mb, rdds) — order documented above
-    val tele = scala.collection.mutable.LinkedHashMap
-      .empty[String, (Double, Long, Long, Long, Int)]
+    val tele = scala.collection.mutable.LinkedHashMap.empty[String, Measure.Reading]
     var coldTotal = 0.0
     val results = names.flatMap { name =>
-      // warm-up execution: pays codegen/JIT/footer-cache one-offs
-      val c0 = System.nanoTime()
-      try force(name) catch { case e: Throwable =>
-        errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+      val (cold, Seq(r)) = measure.warmThenTime(1) {
+        try SparkEntry.queries(name)(spark, sfDir)
+          .write.format("noop").mode("overwrite").save()
+        catch { case e: Throwable =>
+          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
+        }
       }
-      coldTotal += (System.nanoTime() - c0) / 1e9
-      releaseResiduals()
-      // GC BETWEEN executions (outside the timed section): the
-      // ContextCleaner only reclaims finished queries' broadcasts/shuffles
-      // after a GC, and without one later queries measure the whole run's
-      // memory pressure.
-      System.gc()
-      val jobs0 = drainedJobs(); val gc0 = gcMs()
-      val t0 = System.nanoTime()
-      try force(name) catch { case e: Throwable =>
-        errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-      }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val jobs1 = drainedJobs(); val gc1 = gcMs()
-      val residualRdds = sc.getPersistentRDDs.size
-      releaseResiduals()
-      System.gc()
+      coldTotal += cold
       // a crashed query has no meaningful duration: failure is reported in
       // "errors" (and the exit code), never encoded into the timing map
       if (errors.contains(name)) None
       else {
-        tele(name) = (dt, jobs1 - jobs0, gc1 - gc0, usedHeapMb(), residualRdds)
-        Some(name -> dt)
+        tele(name) = r
+        Some(name -> r.sec)
       }
     }
     // The result line must stay SHORT: the harness that captures this
@@ -185,10 +93,10 @@ object Bench {
     // must arbitrate): "q217":[sec,jobs,gc_ms,heap_mb,rdds]. The full map
     // for every query is in bench_detail.json's "telemetry".
     def teleRow(k: String): String = {
-      val (s0, j, g, h, r) = tele(k)
+      val r = tele(k)
       "\"" + shortKey(k) + "\":[" +
-        BigDecimal(s0).setScale(1, BigDecimal.RoundingMode.HALF_UP) +
-        s",$j,$g,$h,$r]"
+        BigDecimal(r.sec).setScale(1, BigDecimal.RoundingMode.HALF_UP) +
+        s",${r.jobs},${r.gcMs},${r.heapMb},${r.rdds}]"
     }
     val teleBudget = 420
     val teleSlowest = results.sortBy(-_._2).map(_._1)
@@ -206,19 +114,17 @@ object Bench {
         .mkString("{", ",", "}")
     def sec(v: Double) = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP)
     val total = sec(results.map(_._2).sum)
-    val gcTotalMs = tele.values.map(_._3).sum
+    val gcTotalMs = tele.values.map(_.gcMs).sum
     // full-fidelity record for humans/judges: every query, 3 dp, full names
     val detail = results.map { case (k, v) => s"${JsonEscape(k)}:${sec(v)}" }
       .mkString("{", ",", "}")
-    val teleDetail = tele.map { case (k, (_, j, g, h, r)) =>
-      s"${JsonEscape(k)}:{" + s""""jobs":$j,"gc_ms":$g,"heap_mb":$h,"rdds":$r}"""
+    val teleDetail = tele.map { case (k, r) =>
+      s"${JsonEscape(k)}:{" + s""""jobs":${r.jobs},"gc_ms":${r.gcMs},"heap_mb":${r.heapMb},"rdds":${r.rdds}}"""
     }.mkString("{", ",", "}")
-    // never clobber the full recording from a SPARK_GRAFT_ONLY-restricted run
-    if (only.isEmpty)
-      try java.nio.file.Files.writeString(
-        java.nio.file.Paths.get("bench_detail.json"),
-        s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cold_total_sec":${sec(coldTotal)},"gc_total_ms":$gcTotalMs,"queries":$detail,"telemetry":$teleDetail$errJson}""" + "\n")
-      catch { case _: Throwable => () } // a read-only cwd must not fail the bench
+    try java.nio.file.Files.writeString(
+      java.nio.file.Paths.get("bench_detail.json"),
+      s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cold_total_sec":${sec(coldTotal)},"gc_total_ms":$gcTotalMs,"queries":$detail,"telemetry":$teleDetail$errJson}""" + "\n")
+    catch { case _: Throwable => () } // a read-only cwd must not fail the bench
     println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs$teleJson$errJson,"sf":"$sfDir","cold_total_sec":${sec(coldTotal)},"gc_total_ms":$gcTotalMs}""")
     spark.stop()
     if (errors.nonEmpty) sys.exit(1)

@@ -2,19 +2,25 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session factory with the engine's standard configuration.
+/** The one session factory: every main in the program builds its session
+  * here, so the benchmark, the correctness dump and the pipeline all run
+  * under the same configuration.
   *
-  * Tuned for the local[32] harness but every knob is the one that matters on
-  * a real cluster too: AQE on (runtime re-plan, skew-join splitting),
-  * shuffle partitions sized to cores (not the 200 default), and UTC.
+  * `SPARK_GRAFT_CPUS` (default: the JVM's available processors) sets both
+  * the local master width and the shuffle width — one shuffle partition per
+  * core, not the 200 default. AQE is on (runtime re-plan, skew-join
+  * splitting, partition coalescing) and the session clock is UTC.
   */
 object GraftSession {
-  def builder(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
-              shufflePartitions: Int = 32): SparkSession.Builder =
+  private def cpus: Int =
+    sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+      .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  def builder(): SparkSession.Builder =
     SparkSession.builder()
-      .master(master)
+      .master(s"local[$cpus]")
       .appName("graft")
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")

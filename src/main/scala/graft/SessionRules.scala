@@ -17,9 +17,10 @@ import org.apache.spark.sql.execution.SparkStrategy
   * the check+append per session (`ExperimentalMethods` is per-session
   * state, so the lock is scoped exactly to what it guards).
   *
-  * Sessions built via [[GraftSession]] get the same rules up front through
-  * `GraftExtensions`; this path exists for externally-built sessions
-  * (tests, the driver's Verify/Bench mains) where the builder isn't ours.
+  * Only a session built with `spark.sql.extensions=...GraftExtensions`
+  * gets the same rules up front. [[GraftSession]] does not install the
+  * extensions, so the program's own mains, the tests and externally-built
+  * sessions all pick the rules up here, on first use.
   */
 object SessionRules {
   def ensureOptimizerRule(spark: SparkSession, rule: Rule[LogicalPlan]): Unit =

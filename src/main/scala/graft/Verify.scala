@@ -1,41 +1,33 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare. A query that
+  * fails is printed to stderr and named in failures.json (query → message,
+  * `{}` when every query ran); the run carries on and the exit code does
+  * not change. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet // optional: restrict to named queries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.get()
     new java.io.File(outDir).mkdirs()
+    val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        val msg = Option(e.getMessage).getOrElse(e.getClass.getName)
+        failures(name) = msg
+        System.err.println(s"[verify] $name failed: $msg")
       }
-      // same deterministic block release as Bench: residual checkpoint
-      // blocks from 363 sequential queries otherwise pool up until a GC
-      // happens to trigger the ContextCleaner
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
+      Measure.releaseResiduals(spark) // the same block release as Bench
     }
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${JsonEscape(k)}: ${JsonEscape(v)}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    def jsonMap(m: Iterable[(String, String)]): String =
+      m.map { case (k, v) => s"${JsonEscape(k)}: ${JsonEscape(v)}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), jsonMap(SparkEntry.oracleSql))
+    Files.writeString(Paths.get(s"$outDir/failures.json"), jsonMap(failures))
     spark.stop()
   }
 }

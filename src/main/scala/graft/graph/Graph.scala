@@ -488,7 +488,10 @@ object Graph {
       try {
       // merge an update stream into the estimate table, flagging movers.
       // upd arrives hash-partitioned by id (agg output / aligned with the
-      // checkpointed cur), so the merge join never exchanges cur
+      // checkpointed cur), so from round 1 on the merge join never
+      // exchanges cur. Round 0's cur is checkpointed under the session
+      // shuffle width, so the first merge re-exchanges it once — accepted
+      // when the round-0 re-pin was reverted (OPTIMIZATION_r15.md item 6)
       def merge(cur: DataFrame, upd: DataFrame): DataFrame =
         cur.select($"id", $"c".as("c0")).join(upd, Seq("id"), "left")
           .select($"id", coalesce($"h", $"c0").as("c"),

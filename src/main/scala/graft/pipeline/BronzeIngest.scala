@@ -9,12 +9,10 @@ import org.apache.spark.sql.types._
   * rows, upserted idempotently on (symbol, date).
   *
   * Reference: notebooks/bronze/01_ingest_bronze.py. Semantics kept exactly:
-  *  - directory glob of `*.csv` with header + schema inference, then
-  *    explicit casts ("infer, then cast", 01:23-27,40-53);
+  *  - directory glob of `*.csv` with a header row (01:23-27);
   *  - symbol extracted from the filename via `/([^/]+)\.csv$` group 1
   *    (01:33-36); file provenance via input_file_name() (01:28);
-  *  - FX files carry no Volume column → typed-null volume (01:49-53), a
-  *    schema-dependent host-language branch (SURVEY P21);
+  *  - FX files carry no Volume column → typed-null volume (01:49-53);
   *  - rows with null symbol/date/close dropped (01:64-68);
   *  - within-batch dropDuplicates on (symbol,date) — arbitrary survivor by
   *    contract (01:63-68, SURVEY D1);
@@ -26,35 +24,36 @@ import org.apache.spark.sql.types._
   */
 object BronzeIngest {
 
+  /** Every file is read with the declared [[Schemas.stooqCsv]], never
+    * with an inferred one: the reference's "infer, then cast" (01:23-27,
+    * 40-53) infers ONE header for the whole glob, and Spark takes it from
+    * the largest file, so a large FX file next to a small equity file
+    * nulls every equity Volume with only a WARN. Columns bind by
+    * position: an FX row ends after Close and reads Volume as null, and a
+    * field that does not parse reads as null (a null close is dropped
+    * below). No inference pass runs over the batch. */
   def readCsvDir(spark: SparkSession, csvDir: String, source: String,
-                 ingestedAt: Timestamp): DataFrame = {
-    val raw = spark.read
+                 ingestedAt: Timestamp): DataFrame =
+    spark.read
       .option("header", "true")
-      .option("inferSchema", "true")
+      .schema(Schemas.stooqCsv)
       .csv(s"$csvDir/*.csv")
-
-    val withVolume =
-      if (raw.columns.contains("Volume")) raw.withColumn("volume", col("Volume").cast(LongType))
-      else raw.withColumn("volume", lit(null).cast(LongType))
-
-    withVolume
       .withColumn("input_file", input_file_name())
       .withColumn("symbol", regexp_extract(col("input_file"), "/([^/]+)\\.csv$", 1))
       .select(
         col("symbol"),
-        to_date(col("Date")).as("date"),
-        col("Open").cast(DoubleType).as("open"),
-        col("High").cast(DoubleType).as("high"),
-        col("Low").cast(DoubleType).as("low"),
-        col("Close").cast(DoubleType).as("close"),
-        col("volume"),
+        col("Date").as("date"),
+        col("Open").as("open"),
+        col("High").as("high"),
+        col("Low").as("low"),
+        col("Close").as("close"),
+        col("Volume").cast(LongType).as("volume"),
         lit(source).as("source"),
         lit(ingestedAt).as("ingested_at"),
         col("input_file"))
       .filter(col("symbol").isNotNull && col("symbol") =!= "" &&
         col("date").isNotNull && col("close").isNotNull)
       .dropDuplicates("symbol", "date")
-  }
 
   /** Ingest a CSV batch into bronze_prices. Idempotent: the upsert key is
     * (symbol, date), incoming wins. A non-empty `symbols` whitelist and

@@ -8,11 +8,22 @@ import org.apache.spark.sql.types._
   * notebooks/gold/03_aggregate_gold.py:19-36,
   * notebooks/gold/04_data_quality_checks.py:23-36).
   *
-  * The reference's contract is "infer at the edge, then cast to these" —
-  * kept: BronzeIngest re-enforces every column below regardless of what CSV
-  * inference produced.
+  * The reference infers the CSV schema at the edge and then casts to
+  * these; BronzeIngest instead reads every file with [[stooqCsv]], since
+  * one inferred header for a mixed equity/FX batch loses columns.
   */
 object Schemas {
+
+  /** Raw Stooq daily bars, in file order (FIXTURES.md §1). FX files carry
+    * no Volume column. Volume is read as DOUBLE and cast to BIGINT in
+    * bronze, so a fractional volume truncates instead of reading as null. */
+  val stooqCsv: StructType = StructType(Seq(
+    StructField("Date", DateType),
+    StructField("Open", DoubleType),
+    StructField("High", DoubleType),
+    StructField("Low", DoubleType),
+    StructField("Close", DoubleType),
+    StructField("Volume", DoubleType)))
 
   val bronze: StructType = StructType(Seq(
     StructField("symbol", StringType, nullable = false),

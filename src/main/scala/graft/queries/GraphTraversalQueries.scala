@@ -707,8 +707,11 @@ object GraphTraversalQueries extends QueryModule {
     // the count's real job is pinning the deg checkpoint; an empty
     // graph is a valid input and yields an empty labeling (the q268
     // convention across the graph gates — empty result, not a throw)
-    if (deg.count() == 0)
+    if (deg.count() == 0) {
+      graft.graph.Graph.releaseCheckpoint(edges0)
+      graft.graph.Graph.releaseCheckpoint(deg)
       return s.emptyDataset[(Long, Long)].toDF("node_id", "community")
+    }
     // Round shape (round-13 rework, each piece A/B'd at sf0.1): the
     // candidate stream (node, neighbor-community, k_{i,c}) is |E|-sized,
     // so (a) the argmax is the partial-combinable min(struct(-s, c))
@@ -1117,19 +1120,20 @@ object GraphTraversalQueries extends QueryModule {
     // COLLECT-TERMINATED gate: both sweeps reduce to driver scalars and
     // the returned frame is a local Seq, so EVERY pin this gate creates
     // (the edge pin + both sweeps' per-level dist stacks) is dead at
-    // return. Snapshot the persistent-RDD set at entry and free the
-    // delta before returning (round-15, guide §5) — previously the gate
-    // left 15 residual pins per execution for the session to carry.
-    val pinned0 = s.sparkContext.getPersistentRDDs.keySet
-    def releaseGatePins(): Unit =
-      s.sparkContext.getPersistentRDDs.foreach { case (id, r) =>
-        if (!pinned0.contains(id)) r.unpersist(blocking = false)
-      }
+    // return (round-15, guide §5) — previously the gate left 15 residual
+    // pins per execution for the session to carry. Free exactly the
+    // checkpoint scans of the gate's own frames — the edge pin, and the
+    // sweeps' results, which are unions of their dist-stack checkpoints —
+    // never a pin another query created in the same session.
+    def releaseGatePins(frames: DataFrame*): Unit =
+      frames.flatMap(_.queryExecution.analyzed.collect {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+      }).foreach(_.unpersist(blocking = false))
     // lazy pin: the seed argmin materializes the blocks in its own job
     val edges = sparseSymEdges(s, dir).localCheckpoint(false)
     val seedRow = edges.agg(min($"src")).collect().head
     if (seedRow.isNullAt(0)) {  // empty graph: empty result, not an NPE
-      releaseGatePins()
+      releaseGatePins(edges)
       return Seq.empty[(Long, Long, Long, Long, Long)]
         .toDF("seed_id", "far1_id", "ecc1", "far2_id", "pseudo_diameter")
     }
@@ -1142,7 +1146,7 @@ object GraphTraversalQueries extends QueryModule {
     val out = Seq((seed, far1, ecc1.toLong, far2Row.getLong(0),
         far2Row.getInt(1).toLong))
       .toDF("seed_id", "far1_id", "ecc1", "far2_id", "pseudo_diameter")
-    releaseGatePins()
+    releaseGatePins(edges, b1, b2)
     out
   }
   private val q268Sql =

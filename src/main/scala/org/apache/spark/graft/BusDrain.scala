@@ -4,12 +4,12 @@ import org.apache.spark.SparkContext
 
 /** Package-location accessor for the `private[spark]` listener bus.
   *
-  * [[graft.Bench]] attributes Spark JOB COUNTS to individual queries by
+  * [[graft.Measure]] attributes Spark JOB COUNTS to individual queries by
   * snapshotting a counting listener before/after each timed execution;
   * the listener bus is ASYNC, so without an explicit drain a query's
-  * trailing job events would bleed into the next query's count (the
-  * JobFloorProbe tool papers over this with Thread.sleep(800), which at
-  * 362 queries x 2 boundaries would add ~10 minutes of dead wall).
+  * trailing job events would bleed into the next query's count (a fixed
+  * Thread.sleep(800) instead would add ~10 minutes of dead wall at 362
+  * queries x 2 boundaries).
   * `LiveListenerBus.waitUntilEmpty` is exactly the needed barrier but is
   * `private[spark]`, hence this one-call shim in the org.apache.spark
   * namespace (same discipline as the sql/graft expression bridge).
